@@ -159,6 +159,10 @@ object Behavioral {
       .select(col("user_id"), expr(graft.util.SqlArith.floorDiv("unix_micros(ts)", 86400000000L)).as("day"))
       .groupBy("user_id").agg(min("day").as("day"))
     firstDay.groupBy("day").agg(count(lit(1)).as("n_new"))
+      // Unpartitioned window, safe by the day domain: one row per calendar
+      // day the events span (30 at every generated scale — ScaleUp
+      // replicates users, not time; ≤366 per year of a real feed), so the
+      // single partition holds days, never events.
       .withColumn("cum_users",
         sum("n_new").over(Window.orderBy("day")
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
@@ -1103,6 +1107,11 @@ object Behavioral {
     val days = users.groupBy("d")
       .agg(count(lit(1)).as("n_leave"),
         sum(when(!col("censored"), 1L).otherwise(0L)).as("n_churn"))
+    // Both windows below are unpartitioned, safe by the day domain: `days`
+    // has one row per distinct lifetime d ∈ [0, span of the events in
+    // days] (≤30 at every generated scale — ScaleUp replicates users, not
+    // time; ≤366 per year of a real feed), so the single partition holds
+    // days, never users.
     val w = Window.orderBy("d")
       .rowsBetween(Window.unboundedPreceding, -1)
     days.crossJoin(broadcast(total))

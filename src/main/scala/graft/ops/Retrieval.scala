@@ -190,19 +190,17 @@ object Retrieval {
     * λ=0.7 — the de-duplicating re-rank that keeps a near-identical
     * second copy of the best hit from wasting a result slot (and, in a
     * training pipeline, keeps retrieved context sets diverse). Greedy MMR
-    * is inherently sequential in k, so the implementation makes the
-    * sequence EXPLICIT and everything else data-parallel: 5 rounds, each
-    * one equi-join (penalty = max sim to the selected set, a bounded
-    * groupBy-max over the persisted 380-pair-per-query candidate-sim
-    * relation), an anti-join to drop picked candidates, and a struct-max
-    * argmax per query — never a window, never a collect, all queries
-    * advance in the same round concurrently. Determinism: relevance and
-    * sims are quantized to BIGINT millionths BEFORE the λ-combination
+    * is inherently sequential in k, so the candidate relation and the
+    * 380-pair-per-query candidate-sim relation are built data-parallel,
+    * then the 5 greedy rounds replay on the DRIVER ([[mmrGreedy]]) over
+    * two bounded collects (≤5 queries × 20 candidates, and that squared
+    * for the pairs): per round, penalty = max sim to the selected set,
+    * picked candidates drop out, argmax per query. Determinism: relevance
+    * and sims are quantized to BIGINT millionths BEFORE the λ-combination
     * (`7·rel_q − 3·sim_q`, integers end-to-end — the q112 discipline),
-    * ties broken by smallest doc_id via lexicographic struct-max; rounds
-    * truncate lineage eagerly (the selected set is referenced twice per
-    * round — [[graft.util.Lineage]]) and the oracle's rounds are
-    * `AS MATERIALIZED` for the same reason.
+    * ties broken by smallest doc_id (the oracle's lexicographic
+    * struct-max); the replay adds no lineage, and the oracle's rounds are
+    * `AS MATERIALIZED` so each round's selected set is computed once.
     */
   /** Candidate-pair cosine sims (query_id, ca, cb, sim_q) for a
     * per-query candidate relation — MMR's penalty input, bounded at
@@ -351,8 +349,10 @@ object Retrieval {
     * the MMR sims), `retr:rrf`, `retr:emb`, `knn:neighbors` — so the
     * composed job pays each expensive build exactly once per session
     * (pinned by SharedRelationSpec). Same exact-integer discipline as
-    * q280 (10⁻¹² rank units, 85/100 damping by BIGINT floor-division);
-    * the seed count is a 1-row broadcast, never a collect of data rows.
+    * q280 (10⁻¹² rank units, 85/100 damping by BIGINT floor-division).
+    * The MMR stage is q276's driver-local greedy replay ([[mmrGreedy]]),
+    * whose only collects are the bounded fused candidates (≤5 queries ×
+    * 10) and their pairs; the PPR seed count is a 1-row broadcast.
     */
   private val q295: Q = (s, dir) => {
     val S = 1000000000000L

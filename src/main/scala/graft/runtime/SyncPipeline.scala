@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.diff.Reconcile
 import graft.model.Schemas
-import graft.sink.JdbcUpsert
+import graft.sink.v2.JdbcUpsertProvider
 import graft.source.BlazeSource
 
 /** The reference's core dataflow EP3 (`src/main.rs:176-300`) as one Spark
@@ -12,7 +12,8 @@ import graft.source.BlazeSource
   *
   *   source scan → extract(id, version) → validity filter
   *     → full-outer join vs target snapshot → classify
-  *     → parallel INSERT / UPDATE / DELETE → count reconciliation
+  *     → one `graft-jdbc-upsert` write (INSERT / UPDATE / DELETE)
+  *     → count reconciliation
   *
   * vs. the reference: the target snapshot is never collected into driver
   * memory (its BTreeMap, `src/main.rs:49-75`, is the scalability ceiling —
@@ -21,12 +22,11 @@ import graft.source.BlazeSource
   *
   * Execution-count discipline (the 100 TB concern): the classified relation
   * is computed ONCE and persisted (memory-and-disk, spillable), then read
-  * four times — one counting job plus the three write jobs. Without the
-  * persist, each of those jobs would re-run the source scan and the join
-  * from scratch (6× reads of the corpus), and — worse — any count taken
-  * after the writes would observe the target the writes just mutated and
-  * report garbage. All counts here are taken from the persisted
-  * classification BEFORE the first write executes.
+  * twice — one counting job plus the one write job. Without the persist,
+  * the write would re-run the source scan and the join from scratch, and
+  * — worse — any count taken after the write would observe the target the
+  * write just mutated and report garbage. All counts here are taken from
+  * the persisted classification BEFORE the write executes.
   */
 object SyncPipeline {
 
@@ -72,70 +72,22 @@ object SyncPipeline {
   /** One type's sync. `snapshot` is the target's (pk_id, resource_id,
     * version_id) projection (never the JSONB payload — §4; see
     * [[graft.source.Snapshot]] for the production JDBC reader);
-    * `targetCount` reads the post-write count.
+    * `writeOptions` reaches the sink ([[JdbcUpsertProvider.write]]:
+    * `url`/`dialect`/`connector`/`batchsize`); `targetCount` reads the
+    * post-write count. The whole classified diff goes down in ONE write,
+    * all three actions applied per partition inside one task transaction.
     */
-  def syncOne(spark: SparkSession,
-              resourceType: String,
+  def syncOne(resourceType: String,
               resources: DataFrame,
               snapshot: DataFrame,
-              connect: () => (String => Unit, () => Unit),
-              targetCount: String => Long,
-              batchSize: Int = JdbcUpsert.DefaultBatchSize,
-              dialect: JdbcUpsert.Dialect = JdbcUpsert.Postgres): SyncResult =
-    syncCore(resourceType, resources, snapshot, targetCount) { (classified, table) =>
-      def only(action: String) = classified.filter(col("action") === action)
-      JdbcUpsert.insertPartitions(
-        only(Reconcile.Insert).select("resource"), table, connect, batchSize,
-        dialect)
-      JdbcUpsert.updatePartitions(
-        only(Reconcile.Update)
-          .select(col("pk_id").cast("int").as("pk_id"), col("resource")),
-        table, connect, batchSize, dialect)
-      JdbcUpsert.deletePartitions(
-        only(Reconcile.Delete).select(col("pk_id").cast("int").as("pk_id")),
-        table, connect, batchSize, dialect)
-    }
-
-  /** One type's sync through the DECLARATIVE V2 write path: the whole
-    * classified diff goes down in ONE `graft-jdbc-upsert` write (all
-    * three actions applied per partition inside one task transaction,
-    * riding Spark's V2 commit/abort protocol) instead of three
-    * `foreachPartition` jobs. `writeOptions` reaches the sink's
-    * connector (`url`/`dialect`/`connector`/`batchsize`).
-    */
-  def syncOneV2(spark: SparkSession,
-                resourceType: String,
-                resources: DataFrame,
-                snapshot: DataFrame,
-                writeOptions: Map[String, String],
-                targetCount: String => Long): SyncResult =
-    syncCore(resourceType, resources, snapshot, targetCount) { (classified, table) =>
-      classified.filter(col("action") =!= Reconcile.Noop)
-        .select(col("action"), col("pk_id").cast("int").as("pk_id"),
-          col("resource"))
-        .write.format("graft-jdbc-upsert")
-        .options(writeOptions)
-        .option("table", table)
-        .mode("append")
-        .save()
-    }
-
-  /** Shared classify → count → write → reconcile skeleton: counts are
-    * taken from the persisted classification BEFORE any write mutates
-    * the live target (the execution-count discipline in the object
-    * scaladoc), then `writeClassified` applies the diff.
-    */
-  private def syncCore(resourceType: String,
-                       resources: DataFrame,
-                       snapshot: DataFrame,
-                       targetCount: String => Long)(
-                       writeClassified: (DataFrame, String) => Unit): SyncResult = {
+              writeOptions: Map[String, String],
+              targetCount: String => Long): SyncResult = {
     val table = Schemas.tableName(resourceType)
     val classified = classifyWithPayloads(sourceVersions(resources), snapshot)
       .persist()
     try {
       // One aggregation job materializes the cache AND yields every count
-      // the result needs — before any write mutates the live target.
+      // the result needs — before the write mutates the live target.
       val byAction = classified.groupBy("action").count()
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
         .withDefaultValue(0L)
@@ -145,7 +97,7 @@ object SyncPipeline {
       // every valid source row is exactly one of insert/update/noop
       val srcTotal = nIns + nUpd + byAction(Reconcile.Noop)
 
-      writeClassified(classified, table)
+      JdbcUpsertProvider.write(classified, table, writeOptions)
 
       SyncResult(resourceType, inserts = nIns, updates = nUpd, deletes = nDel,
         sourceTotal = srcTotal, targetAfter = targetCount(table))
@@ -159,14 +111,10 @@ object SyncPipeline {
     * jobs are internally parallel, so sequential per-type is fine — each
     * sync saturates the cluster). `sourceFor`/`snapshotFor` are factories
     * so the scan itself is pluggable — see [[blazeV2Source]] (the scale
-    * default) and [[blazeDriverSource]] (parity/fixture path).
-    *
-    * DEFAULT write path (round-9): the declarative DSv2 sink
-    * ([[syncOneV2]]) — one V2 write per type under Spark's commit/abort
+    * default) and [[blazeDriverSource]] (parity/fixture path). Each type
+    * is one [[syncOne]]: one V2 write under Spark's commit/abort
     * protocol, e2e-proven on Derby (sync/heal/truncate/task-abort,
-    * `DerbyE2ESpec`) and on the PG-semantics store (`SyncE2ESpec`). The
-    * imperative `foreachPartition` writers remain as the explicit
-    * fallback, [[runSyncLegacy]].
+    * `DerbyE2ESpec`) and on the PG-semantics store (`SyncE2ESpec`).
     *
     * Keying contract: `sourceFor` receives the RESOURCE TYPE (it names a
     * search URL); `snapshotFor` and `targetCount` receive the mirror
@@ -181,23 +129,8 @@ object SyncPipeline {
               writeOptions: Map[String, String],
               targetCount: String => Long): Seq[SyncResult] =
     Schemas.resourceTypes.map { t =>
-      syncOneV2(spark, t, sourceFor(t), snapshotFor(Schemas.tableName(t)),
+      syncOne(t, sourceFor(t), snapshotFor(Schemas.tableName(t)),
         writeOptions, targetCount)
-    }
-
-  /** Explicit fallback: the imperative `foreachPartition` write path
-    * (three statement jobs per type). Same classify/count/reconcile
-    * skeleton; kept for deployments that need a custom statement
-    * transport the V2 connector model can't express.
-    */
-  def runSyncLegacy(spark: SparkSession,
-                    sourceFor: String => DataFrame,
-                    snapshotFor: String => DataFrame,
-                    connect: () => (String => Unit, () => Unit),
-                    targetCount: String => Long): Seq[SyncResult] =
-    Schemas.resourceTypes.map { t =>
-      syncOne(spark, t, sourceFor(t), snapshotFor(Schemas.tableName(t)),
-        connect, targetCount)
     }
 
   /** Scale-path source factory: the DSv2 `blaze` format — one

@@ -5,22 +5,26 @@ import java.util
 import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.write._
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
+import graft.diff.Reconcile
 import graft.sink.JdbcUpsert
 
 /** Executor-side connection factory for the V2 writer: zero-arg-
   * constructible (instantiated by class name on each executor, the
-  * [[graft.source.v2.PageFetcher]] pattern). Returns the same
-  * `(exec, close)` statement transport the `foreachPartition` sink uses
-  * — "BEGIN"/"COMMIT" open and commit the transaction; close without
-  * COMMIT must discard it.
+  * [[graft.source.v2.PageFetcher]] pattern). Returns an `(exec, close)`
+  * statement transport — "BEGIN"/"COMMIT" open and commit the
+  * transaction; close without COMMIT must discard it. This is the
+  * extension point for a custom transport (a test store, a pooled or
+  * instrumented driver).
   */
 trait UpsertConnector extends Serializable {
   def connect(options: Map[String, String]): (String => Unit, () => Unit)
@@ -45,17 +49,25 @@ class DriverManagerConnector extends UpsertConnector {
   }
 }
 
-/** DataSource V2 JDBC upsert SINK (`format("graft-jdbc-upsert")`): the
-  * declarative write path for the reference's O7 UPDATE / O8 INSERT /
-  * O9 DELETE. The input relation is the classified diff itself —
-  * `(action, pk_id, resource)` — and each partition's writer applies
-  * every action through the [[JdbcUpsert.Dialect]] statement text, one
-  * transaction per task attempt, riding Spark's V2 commit protocol:
-  * `commit()` flushes tails and commits, `abort()` (task failure /
-  * speculation loser) closes without commit so the engine rolls the
-  * attempt back — the same attempt-atomicity contract as the
-  * `foreachPartition` path, now enforced by the framework rather than a
-  * try/finally.
+/** DataSource V2 JDBC upsert SINK (short name `graft-jdbc-upsert`): the
+  * one write path for the reference's O7 UPDATE / O8 INSERT / O9
+  * DELETE, used by the batch sync and the CDC stream alike through
+  * [[JdbcUpsertProvider.write]]. The input relation is the classified
+  * diff itself — `(action, pk_id, resource)` — and each partition's
+  * writer applies every action through the [[JdbcUpsert.Dialect]]
+  * statement text, one transaction per task attempt, riding Spark's V2
+  * commit protocol: `commit()` flushes tails and commits, `abort()`
+  * (task failure / speculation loser) closes without commit so the
+  * engine rolls the attempt back.
+  *
+  * Scope, honestly stated: this is attempt-level atomicity, NOT full
+  * exactly-once. Two LIVE attempts of one partition (speculative
+  * execution, or a zombie task whose executor the driver gave up on)
+  * can both reach COMMIT, and a COMMIT whose ack is lost re-runs on
+  * retry — there is no output-commit coordination for JDBC. A sync
+  * deployment therefore runs with speculation off (Spark's default) and
+  * relies on the reconcile's count MISMATCH to surface the rare
+  * double-commit: at-least-once + attempt atomicity + detection.
   *
   * Modes: `append` applies the classified actions;
   * `overwrite` (SaveMode.Overwrite → truncate-and-append, via
@@ -64,9 +76,11 @@ class DriverManagerConnector extends UpsertConnector {
   * scratch rather than diffed.
   *
   * Options: `table` (required), `dialect` (`postgres` default | `ansi`),
-  * `batchsize` (default 10000 = reference `src/main.rs:359`),
-  * `connector` (class name, default [[DriverManagerConnector]]) plus
-  * whatever the connector reads (`url`, `user`, `password`).
+  * `batchsize` (positive; default [[JdbcUpsert.DefaultBatchSize]] =
+  * reference `src/main.rs:359`), `connector` (class name, default
+  * [[DriverManagerConnector]]) plus whatever the connector reads (`url`,
+  * `user`, `password`). A bad `dialect` or `batchsize` fails the write
+  * on the driver, naming the option, before any task runs.
   */
 class JdbcUpsertProvider extends TableProvider with DataSourceRegister {
 
@@ -92,19 +106,50 @@ object JdbcUpsertProvider {
     StructField("pk_id", IntegerType),
     StructField("resource", StringType)))
 
-  def makeConnector(className: String): UpsertConnector =
-    Class.forName(className).getDeclaredConstructor().newInstance()
-      .asInstanceOf[UpsertConnector]
+  /** Apply a classified diff (`action`, `pk_id`, `resource`; any extra
+    * columns are dropped) to `table`: noop rows are filtered out and the
+    * rest goes down in ONE append write. `options` reaches the sink
+    * (`url`/`dialect`/`connector`/`batchsize`).
+    */
+  def write(diff: DataFrame, table: String, options: Map[String, String]): Unit =
+    diff.filter(col("action") =!= Reconcile.Noop)
+      .select(col("action"), col("pk_id").cast("int").as("pk_id"), col("resource"))
+      .write.format("graft-jdbc-upsert")
+      .options(options)
+      .option("table", table)
+      .mode("append")
+      .save()
+
+  /** Open one transport through the `connector` class the options name. */
+  private[v2] def connect(props: Map[String, String]): (String => Unit, () => Unit) =
+    Class.forName(props.getOrElse("connector", classOf[DriverManagerConnector].getName))
+      .getDeclaredConstructor().newInstance()
+      .asInstanceOf[UpsertConnector].connect(props)
 
   private[v2] def dialectFor(props: Map[String, String]): JdbcUpsert.Dialect =
     props.getOrElse("dialect", "postgres") match {
-      case "ansi" => JdbcUpsert.Ansi
-      case _      => JdbcUpsert.Postgres
+      case "postgres" => JdbcUpsert.Postgres
+      case "ansi"     => JdbcUpsert.Ansi
+      case other => throw new IllegalArgumentException(
+        s"graft-jdbc-upsert option 'dialect' must be 'postgres' or 'ansi', got '$other'")
+    }
+
+  private[v2] def batchSizeFor(props: Map[String, String]): Int =
+    props.get("batchsize") match {
+      case None => JdbcUpsert.DefaultBatchSize
+      case Some(v) => v.trim.toIntOption.filter(_ > 0).getOrElse(
+        throw new IllegalArgumentException(
+          s"graft-jdbc-upsert option 'batchsize' must be a positive integer, got '$v'"))
     }
 }
 
 private[v2] class UpsertTable(props: Map[String, String])
   extends Table with SupportsWrite {
+
+  // resolved at write time on the driver, so a bad option fails the
+  // write before any task opens a connection
+  private val dialect = JdbcUpsertProvider.dialectFor(props)
+  private val batchSize = JdbcUpsertProvider.batchSizeFor(props)
 
   override def name(): String = s"jdbc-upsert:${props.getOrElse("table", "?")}"
   override def schema(): StructType = JdbcUpsertProvider.schema
@@ -117,25 +162,24 @@ private[v2] class UpsertTable(props: Map[String, String])
       override def truncate(): WriteBuilder = { doTruncate = true; this }
       override def build(): Write = new Write {
         override def toBatch: BatchWrite =
-          new UpsertBatchWrite(props, info.schema(), doTruncate)
+          new UpsertBatchWrite(props, dialect, batchSize, info.schema(), doTruncate)
       }
     }
 }
 
 private[v2] class UpsertBatchWrite(props: Map[String, String],
+                                   dialect: JdbcUpsert.Dialect,
+                                   batchSize: Int,
                                    inputSchema: StructType,
                                    doTruncate: Boolean) extends BatchWrite {
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
     if (doTruncate) {
       // once, driver-side, before any task writes (truncate-and-append)
-      val (exec, close) = JdbcUpsertProvider
-        .makeConnector(props.getOrElse("connector",
-          classOf[DriverManagerConnector].getName))
-        .connect(props)
+      val (exec, close) = JdbcUpsertProvider.connect(props)
       try exec(s"DELETE FROM ${props("table")}") finally close()
     }
-    new UpsertDataWriterFactory(props, inputSchema)
+    new UpsertDataWriterFactory(props, dialect, batchSize, inputSchema)
   }
 
   // Attempt atomicity lives in each task's transaction (commit/abort on
@@ -149,19 +193,21 @@ private[v2] case class UpsertCommit(inserts: Long, updates: Long,
                                     deletes: Long) extends WriterCommitMessage
 
 private[v2] class UpsertDataWriterFactory(props: Map[String, String],
+                                          dialect: JdbcUpsert.Dialect,
+                                          batchSize: Int,
                                           inputSchema: StructType)
   extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new UpsertDataWriter(props, inputSchema)
+    new UpsertDataWriter(props, dialect, batchSize, inputSchema)
 }
 
 private[v2] class UpsertDataWriter(props: Map[String, String],
+                                   dialect: JdbcUpsert.Dialect,
+                                   batchSize: Int,
                                    inputSchema: StructType)
   extends DataWriter[InternalRow] {
 
   private val table = props("table")
-  private val dialect = JdbcUpsertProvider.dialectFor(props)
-  private val batchSize = props.getOrElse("batchsize", "10000").toInt
   private val aIdx = inputSchema.fieldIndex("action")
   private val pIdx = inputSchema.fieldIndex("pk_id")
   private val rIdx = inputSchema.fieldIndex("resource")
@@ -171,13 +217,12 @@ private[v2] class UpsertDataWriter(props: Map[String, String],
   private val del = ArrayBuffer.empty[Int]
   private var nIns = 0L; private var nUpd = 0L; private var nDel = 0L
 
-  // connection opened lazily at the first row — an empty partition never
-  // touches the database (same contract as transactionalPartition)
+  // connection opened lazily at the first statement — an empty partition,
+  // or one holding only noop rows, never touches the database
   private var conn: Option[(String => Unit, () => Unit)] = None
   private def exec(sql: String): Unit = {
     val c = conn.getOrElse {
-      val t = JdbcUpsertProvider.makeConnector(props.getOrElse("connector",
-        classOf[DriverManagerConnector].getName)).connect(props)
+      val t = JdbcUpsertProvider.connect(props)
       t._1("BEGIN")
       conn = Some(t)
       t

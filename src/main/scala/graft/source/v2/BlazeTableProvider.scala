@@ -184,7 +184,14 @@ private[v2] class BlazeTable(props: Map[String, String])
           (if (countPushed) " PushedAggregates: [COUNT(*)]" else "") +
           pushedLimit.map(l => s" PushedLimit: $l").getOrElse("")
 
-      override def planInputPartitions(): Array[InputPartition] = {
+      override def planInputPartitions(): Array[InputPartition] = planned
+
+      // Planned once per scan: physical planning calls
+      // planInputPartitions on more than one BatchScanExec copy of this
+      // Scan (the columnar-support check and RemoveRedundantProjects), and
+      // each call would otherwise re-probe the server. Spark builds a new
+      // ScanBuilder per query execution, so nothing is reused across runs.
+      private lazy val planned: Array[InputPartition] = {
         // driver-side: one _count=0 probe, zero resource rows transferred
         val probe = BlazeTableProvider.fetchWithRetry(
           BlazeTableProvider.makeFetcher(fetcherClass),

@@ -9,7 +9,7 @@ import graft.source.Snapshot
 
 /** The sync e2e against a REAL JDBC engine: embedded Derby (on the Spark
   * classpath) behind the genuine `java.sql` driver — real connections,
-  * real transactions, real executor-side `foreachPartition` writes
+  * real transactions, real executor-side `graft-jdbc-upsert` writes
   * through the [[JdbcUpsert.Ansi]] dialect, and the snapshot read back
   * through `spark.read.format("jdbc")`. Complements `SyncE2ESpec`, which
   * pins the PostgreSQL statement TEXT by interpreting it: here the text
@@ -26,7 +26,7 @@ object DerbyTarget {
   // behavior family) — a Derby limitation, not a sink property
   // (PostgreSQL sequences are non-transactional). The writer
   // transactions are therefore serialized CLIENT-side by [[txGate]]:
-  // the sink still runs its real foreachPartition tasks, each driving a
+  // the sink still runs its real V2 writer tasks, each driving a
   // real connection/transaction — they just enter commit scope one at a
   // time, which is all a single-writer embedded engine supports anyway.
   // Concurrent-writer semantics are SyncE2ESpec's job (its PG-semantics
@@ -59,10 +59,10 @@ object DerbyTarget {
       }
   }
 
-  /** Real-JDBC connect closure for the partition writers: BEGIN/COMMIT
-    * from `transactionalPartition` map to autocommit-off/commit; close
-    * rolls back any open transaction first (what a dropped PG connection
-    * does server-side — embedded Derby instead refuses to close
+  /** Real-JDBC transport for the sink's writers: the BEGIN/COMMIT each
+    * V2 task attempt issues map to autocommit-off/commit; close rolls
+    * back any open transaction first (what a dropped PG connection does
+    * server-side — embedded Derby instead refuses to close
     * mid-transaction, so the rollback is explicit).
     */
   def connect(): (String => Unit, () => Unit) = {
@@ -110,8 +110,8 @@ object DerbyTarget {
 }
 
 /** V2-writer connector over the Derby target (zero-arg, class-name
-  * instantiated): routes through DerbyTarget.connect so writer
-  * transactions pass the same txGate as the foreachPartition path.
+  * instantiated): routes through DerbyTarget.connect so every writer
+  * transaction passes the txGate.
   */
 class GatedDerbyConnector extends graft.sink.v2.UpsertConnector {
   override def connect(options: Map[String, String]): (String => Unit, () => Unit) =
@@ -119,7 +119,9 @@ class GatedDerbyConnector extends graft.sink.v2.UpsertConnector {
 }
 
 /** Dies on its 2nd real statement — AFTER one already executed inside
-  * the open transaction — to exercise the V2 abort path.
+  * the open transaction — to exercise the V2 abort path. Each task
+  * attempt opens its own connector, so a Spark task retry would fail the
+  * same way; the retry in the specs is an explicit rerun.
   */
 class FailingDerbyConnector extends graft.sink.v2.UpsertConnector {
   override def connect(options: Map[String, String]): (String => Unit, () => Unit) = {
@@ -183,18 +185,17 @@ class DerbyE2ESpec extends AnyFunSuite {
 
   private val spark = SparkTestSession.spark
 
-  private def sync() = {
-    // the Ansi dialect rides each writer; everything else is the same
-    // production pipeline SyncE2ESpec drives
-    graft.model.Schemas.resourceTypes.map { t =>
-      SyncPipeline.syncOne(spark, t,
-        SyncPipeline.blazeV2Source(spark, "http://fixture", 10,
-          classOf[graft.source.v2.FixtureFetcher].getName)(t),
-        DerbyTarget.snapshot(spark)(graft.model.Schemas.tableName(t)),
-        () => DerbyTarget.connect(), DerbyTarget.count,
-        dialect = JdbcUpsert.Ansi)
-    }
-  }
+  private val derbyWrite = Map(
+    "connector" -> classOf[GatedDerbyConnector].getName, "dialect" -> "ansi")
+
+  // the Ansi dialect rides each writer; everything else is the same
+  // production pipeline SyncE2ESpec drives
+  private def sync() = SyncPipeline.runSync(spark,
+    sourceFor = SyncPipeline.blazeV2Source(spark, "http://fixture", 10,
+      classOf[graft.source.v2.FixtureFetcher].getName),
+    snapshotFor = DerbyTarget.snapshot(spark),
+    writeOptions = derbyWrite,
+    targetCount = DerbyTarget.count)
 
   test("real-JDBC sync -> idempotent re-sync -> corruption heals in one run") {
     DerbyTarget.reset()
@@ -246,45 +247,31 @@ class DerbyE2ESpec extends AnyFunSuite {
     DerbyTarget.reset()
     val spark2 = spark
     import spark2.implicits._
-    val rows = (0 until 8).map(i => s"""{"id":"x$i","meta":{"versionId":"1"}}""")
-      .toDF("resource").coalesce(1)
-    // batchSize 2 -> four INSERT statements in the one partition; the
-    // connection dies on the third, AFTER two statements already executed
+    // batchsize 2 -> four INSERT statements in the one partition; the
+    // connection dies on the second, AFTER one statement already executed
     // inside the open Derby transaction
-    val failing = () => {
-      val (exec, close) = DerbyTarget.connect()
-      var stmts = 0
-      ((s: String) => {
-        if (s != "BEGIN" && s != "COMMIT") {
-          stmts += 1
-          if (stmts == 3) throw new RuntimeException("connection lost mid-partition")
-        }
-        exec(s)
-      }, close)
-    }
-    val e = intercept[Exception] {
-      JdbcUpsert.insertPartitions(rows, "patient", failing,
-        batchSize = 2, dialect = JdbcUpsert.Ansi)
-    }
+    val rows = (0 until 8).map(i => ("insert", Option.empty[Int],
+        s"""{"id":"x$i","meta":{"versionId":"1"}}"""))
+      .toDF("action", "pk_id", "resource").coalesce(1)
+    def write(connector: String) = graft.sink.v2.JdbcUpsertProvider.write(rows, "patient",
+      derbyWrite + ("connector" -> connector) + ("batchsize" -> "2"))
+    val e = intercept[Exception](write(classOf[FailingDerbyConnector].getName))
     assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
-      .exists(_.getMessage.contains("connection lost")), e)
+      .exists(t => t.getMessage != null && t.getMessage.contains("connection lost")), e)
     assert(DerbyTarget.count("patient") === 0L,
       "Derby must roll the uncommitted batches back with the failed attempt")
-    JdbcUpsert.insertPartitions(rows, "patient", () => DerbyTarget.connect(),
-      batchSize = 2, dialect = JdbcUpsert.Ansi)
+    write(classOf[GatedDerbyConnector].getName)
     assert(DerbyTarget.count("patient") === 8L, "exactly one copy after retry")
   }
 
   test("V2 write path over real JDBC: sync -> no-op -> heal through one declarative write") {
     DerbyTarget.reset()
     def syncV2() = graft.model.Schemas.resourceTypes.map { t =>
-      SyncPipeline.syncOneV2(spark, t,
+      SyncPipeline.syncOne(t,
         SyncPipeline.blazeV2Source(spark, "http://fixture", 10,
           classOf[graft.source.v2.FixtureFetcher].getName)(t),
         DerbyTarget.snapshot(spark)(graft.model.Schemas.tableName(t)),
-        Map("connector" -> classOf[GatedDerbyConnector].getName,
-          "dialect" -> "ansi"),
-        DerbyTarget.count)
+        derbyWrite, DerbyTarget.count)
     }
     val first = syncV2()
     first.foreach { r =>
@@ -395,8 +382,9 @@ class DerbyE2ESpec extends AnyFunSuite {
     val spark2 = spark
     import spark2.implicits._
     val tricky = """{"id":"q1","meta":{"versionId":"1"},"note":"it's a 'quoted' $value$"}"""
-    JdbcUpsert.insertPartitions(Seq(tricky).toDF("resource"), "patient",
-      () => DerbyTarget.connect(), dialect = JdbcUpsert.Ansi)
+    graft.sink.v2.JdbcUpsertProvider.write(
+      Seq(("insert", Option.empty[Int], tricky)).toDF("action", "pk_id", "resource"),
+      "patient", derbyWrite)
     assert(DerbyTarget.rows("patient").values.toSeq === Seq(tricky))
   }
 }

@@ -20,6 +20,9 @@ class MainSpec extends AnyFunSuite {
     StructField("resource_id", StringType),
     StructField("version_id", LongType)))
 
+  private val collectorWrite =
+    Map("connector" -> classOf[StmtCollectorConnector].getName)
+
   private def emptySnapshot =
     spark.createDataFrame(new java.util.ArrayList[Row](), snapshotSchema)
 
@@ -145,14 +148,29 @@ class MainSpec extends AnyFunSuite {
     val snapshot = spark.createDataFrame(Seq(
       (10, "b", 1L), (12, "d", 9L))).toDF("pk_id", "resource_id", "version_id")
     StmtCollector.clear()
-    val result = SyncPipeline.syncOne(spark, "Patient", counted, snapshot,
-      () => ((s: String) => StmtCollector.add(s), () => ()), _ => 3L)
+    val result = SyncPipeline.syncOne("Patient", counted, snapshot,
+      collectorWrite, _ => 3L)
 
     assert(result.inserts === 2 && result.updates === 1 && result.deletes === 1)
     assert(result.sourceTotal === 3 && result.reconciled)
     // 3 rows, 1 evaluation — without the persist the count job and the
-    // three write jobs would each re-run the scan (≥4 evaluations)
+    // write job would each re-run the scan (≥2 evaluations)
     assert(acc.value === 3L)
+  }
+
+  test("a no-change re-sync opens no connection") {
+    val raw = BlazeSource.parsePages(spark,
+      Seq(bundle(Seq(res("a", 1), res("b", 2), res("c", 3)))))
+    // the target already holds every source version: the diff is all noop
+    val snapshot = spark.createDataFrame(Seq(
+      (10, "a", 1L), (11, "b", 2L), (12, "c", 3L))).toDF("pk_id", "resource_id", "version_id")
+    StmtCollector.clear()
+    val result = SyncPipeline.syncOne("Patient", raw, snapshot, collectorWrite, _ => 3L)
+    assert(result.inserts === 0 && result.updates === 0 && result.deletes === 0)
+    assert(result.sourceTotal === 3 && result.reconciled)
+    // a writer opens its connection (and BEGINs) at its first statement
+    assert(StmtCollector.snapshot().isEmpty,
+      s"no-op sync must not touch the target: ${StmtCollector.snapshot()}")
   }
 
   test("runSync over the DSv2 blaze source: executor-side pages feed all four types") {
@@ -173,16 +191,22 @@ class MainSpec extends AnyFunSuite {
       stmts.exists(_.startsWith(s"INSERT INTO ${t.toLowerCase}"))))
   }
 
-  test("runSyncLegacy (explicit fallback) still drives the foreachPartition writers") {
-    StmtCollector.clear()
-    val results = SyncPipeline.runSyncLegacy(spark,
+  test("runSync probes each type's server total exactly once") {
+    import graft.source.v2.RecordingFetcher
+    RecordingFetcher.urls.clear()
+    val results = SyncPipeline.runSync(spark,
       sourceFor = SyncPipeline.blazeV2Source(spark, "http://fixture", 10,
-        classOf[graft.source.v2.FixtureFetcher].getName),
+        classOf[RecordingFetcher].getName),
       snapshotFor = _ => emptySnapshot,
-      connect = () => ((s: String) => StmtCollector.add(s), () => ()),
+      writeOptions = collectorWrite,
       targetCount = _ => 23L)
-    assert(results.size === 4)
-    assert(results.forall(r => r.inserts === 23 && r.deletes === 0 && r.reconciled))
+    assert(results.forall(r => r.inserts === 23 && r.reconciled))
+    val urls = RecordingFetcher.urls.toArray(Array.empty[String]).toSeq
+    val probes = urls.filter(_.contains("_count=0"))
+    assert(probes.sorted === Schemas4.types.map(t => s"http://fixture/fhir/$t?_count=0").sorted,
+      s"one _count=0 probe per type: $probes")
+    // 23 resources at pageSize 10 = 3 pages per type, each fetched once
+    assert(urls.size - probes.size === 4 * 3, urls)
   }
 }
 

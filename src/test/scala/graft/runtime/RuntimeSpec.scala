@@ -7,7 +7,7 @@ import graft.SparkTestSession
 import graft.sink.JdbcUpsert
 import graft.source.BlazeSource
 
-/** JVM-static statement sink for local-mode foreachPartition tests. */
+/** JVM-static statement sink for local-mode sink-writer tests. */
 object StmtCollector {
   private val buf = scala.collection.mutable.Buffer[String]()
   def add(s: String): Unit = buf.synchronized { buf += s; () }
@@ -68,12 +68,12 @@ class RuntimeSpec extends AnyFunSuite {
   // ---- JdbcUpsert SQL + batching ----
 
   test("insert/update/delete SQL match the reference's statement shapes") {
-    assert(JdbcUpsert.insertSql("patient", Seq("""{"a":1}""")) ===
+    assert(JdbcUpsert.Postgres.insertSql("patient", Seq("""{"a":1}""")) ===
       """INSERT INTO patient (resource) VALUES ($${"a":1}$$)""")
-    assert(JdbcUpsert.updateSql("patient", Seq((7, """{"a":1}"""))) ===
+    assert(JdbcUpsert.Postgres.updateSql("patient", Seq((7, """{"a":1}"""))) ===
       """UPDATE patient SET resource = data.resource::jsonb FROM (VALUES """ +
         """(7, $${"a":1}$$)) AS data(id, resource) WHERE data.id = patient.id""")
-    assert(JdbcUpsert.deleteSql("patient", Seq(1, 2, 3)) ===
+    assert(JdbcUpsert.Postgres.deleteSql("patient", Seq(1, 2, 3)) ===
       "DELETE FROM patient WHERE id IN (1, 2, 3)")
   }
 
@@ -91,12 +91,41 @@ class RuntimeSpec extends AnyFunSuite {
     assert(!hostile.contains(tag))
   }
 
-  test("writeBatched chunks at batchSize and flushes the tail") {
-    val stmts = scala.collection.mutable.Buffer[String]()
-    val n = JdbcUpsert.writeBatched((1 to 25).iterator, 10,
-      (c: Seq[Int]) => s"batch:${c.size}", stmts += _)
-    assert(n === 25)
-    assert(stmts.toSeq === Seq("batch:10", "batch:10", "batch:5"))
+  private def collectorWrite(rows: org.apache.spark.sql.DataFrame,
+                             options: Map[String, String] = Map.empty): Unit =
+    graft.sink.v2.JdbcUpsertProvider.write(rows, "patient",
+      Map("connector" -> classOf[StmtCollectorConnector].getName) ++ options)
+
+  private def inserts(n: Int) = {
+    val spark2 = spark
+    import spark2.implicits._
+    (1 to n).map(i => ("insert", Option.empty[Int], s"""{"n":$i}"""))
+      .toDF("action", "pk_id", "resource")
+  }
+
+  test("the sink chunks at batchsize and flushes the tail in one transaction") {
+    StmtCollector.clear()
+    collectorWrite(inserts(25).coalesce(1), Map("batchsize" -> "10"))
+    val stmts = StmtCollector.snapshot()
+    assert(stmts.head === "BEGIN" && stmts.last === "COMMIT", stmts)
+    val body = stmts.drop(1).dropRight(1)
+    assert(body.forall(_.startsWith("INSERT INTO patient")), body)
+    assert(body.map(_.split("\"n\":", -1).length - 1) === Seq(10, 10, 5))
+  }
+
+  test("the sink rejects a bad dialect or batchsize, naming the option") {
+    def message(options: Map[String, String]): String = {
+      val e = intercept[Exception](collectorWrite(inserts(3), options))
+      Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .flatMap(t => Option(t.getMessage)).mkString(" | ")
+    }
+    StmtCollector.clear()
+    for (d <- Seq("ANSI", "postgress"))
+      assert(message(Map("dialect" -> d)).contains("option 'dialect'"), d)
+    for (b <- Seq("0", "-5", "ten", "1e4"))
+      assert(message(Map("batchsize" -> b)).contains("option 'batchsize'"), b)
+    assert(StmtCollector.snapshot().isEmpty,
+      "a rejected write must fail before any task opens a connection")
   }
 
   test("ddl matches the reference schema: NOT NULL audit columns, trigger name") {
@@ -173,13 +202,12 @@ class RuntimeSpec extends AnyFunSuite {
     val body = bundle(Seq(res("a", 1), res("b", 2), res("c", 3)), None)
     val resources = BlazeSource.parsePages(spark, Seq(body))
 
-    // foreachPartition closures are serialized into tasks even in local
-    // mode — collect through a JVM-static sink, not a captured buffer.
+    // the sink's writers run as tasks even in local mode — collect through
+    // a JVM-static sink, reached by the class-name-instantiated connector
     StmtCollector.clear()
-    val connect = () => ((s: String) => StmtCollector.add(s), () => ())
     // fake target row count after sync: 3 existing + 1 insert - 1 delete
-    val result = SyncPipeline.syncOne(spark, "Patient", resources, snapshot,
-      connect, _ => 3L)
+    val result = SyncPipeline.syncOne("Patient", resources, snapshot,
+      Map("connector" -> classOf[StmtCollectorConnector].getName), _ => 3L)
 
     assert(result.inserts === 1 && result.updates === 1 && result.deletes === 1)
     assert(result.sourceTotal === 3 && result.reconciled)

@@ -1,6 +1,7 @@
 package graft.runtime
 
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
@@ -162,13 +163,31 @@ class PgLiteConnector extends graft.sink.v2.UpsertConnector {
     PgLiteStore.connect()
 }
 
+/** Dies on its 3rd data statement — AFTER two already executed inside
+  * the open transaction — to exercise the sink's abort path.
+  */
+class FailingPgLiteConnector extends graft.sink.v2.UpsertConnector {
+  override def connect(options: Map[String, String]): (String => Unit, () => Unit) = {
+    val (exec, close) = PgLiteStore.connect()
+    var stmts = 0
+    ((s: String) => {
+      if (s != "BEGIN" && s != "COMMIT") {
+        stmts += 1
+        if (stmts == 3) throw new RuntimeException("connection lost mid-partition")
+      }
+      exec(s)
+    }, close)
+  }
+}
+
 /** End-to-end self-healing contract (reference `src/main.rs:159-175`):
   * sync into an empty target, prove the SECOND run is a no-op, corrupt
   * the target three ways (drop a row, stale a version, add an alien
   * row), prove one sync heals all three, and the run after that is a
   * no-op again. The full production dataflow runs each time: DSv2
   * executor-side page fetch → extract/validate → full-outer classify →
-  * partition-parallel statement writes → post-write count reconcile.
+  * one `graft-jdbc-upsert` write → post-write count reconcile. The CDC
+  * stream writes through the same sink into the same store.
   */
 class SyncE2ESpec extends AnyFunSuite {
 
@@ -234,73 +253,60 @@ class SyncE2ESpec extends AnyFunSuite {
     }
   }
 
-  test("legacy foreachPartition path: sync -> no-op re-sync -> heal, unchanged semantics") {
+  test("CDC applyJdbc over PG semantics: upsert, tombstone, replay no-op") {
     PgLiteStore.clear()
-    // the explicit fallback (pre-round-9 default) must keep the exact
-    // same classify/write/heal semantics as the V2 default above
-    def syncLegacy() = SyncPipeline.runSyncLegacy(spark,
-      sourceFor = SyncPipeline.blazeV2Source(spark, "http://fixture", 10,
-        classOf[graft.source.v2.FixtureFetcher].getName),
-      snapshotFor = PgLiteStore.snapshot(spark),
-      connect = () => PgLiteStore.connect(),
-      targetCount = PgLiteStore.count)
+    val spark2 = spark
+    import spark2.implicits._
+    def doc(id: String, v: Long) =
+      s"""{"id":"$id","meta":{"versionId":"$v"},"resourceType":"Patient"}"""
+    val input = MemoryStream[(String, Long, String)](spark2)
+    val ckpt = java.nio.file.Files.createTempDirectory("cdc-pglite").toString
+    val q = graft.streaming.IncrementalSync.run(
+      input.toDF().toDF("resource_id", "version_id", "resource"), ckpt,
+      s => PgLiteStore.snapshot(s)("patient"),
+      graft.streaming.IncrementalSync.applyJdbc("patient",
+        Map("connector" -> classOf[PgLiteConnector].getName)))
+    try {
+      input.addData(("a", 1L, doc("a", 1)), ("b", 1L, doc("b", 1)), ("c", 1L, doc("c", 1)))
+      q.processAllAvailable()
+      val inserted = PgLiteStore.rows("patient")
+      assert(inserted.values.toSet === Set(doc("a", 1), doc("b", 1), doc("c", 1)))
 
-    val first = syncLegacy()
-    assert(first.size === 4)
-    first.foreach { r =>
-      assert(r.inserts === 23 && r.updates === 0 && r.deletes === 0, r)
-      assert(r.reconciled, s"post-write count must equal source: $r")
-    }
-    val second = syncLegacy()
-    second.foreach { r =>
-      assert(r.inserts === 0 && r.updates === 0 && r.deletes === 0,
-        s"second legacy sync must be a no-op: $r")
-    }
-    // same three-way corruption as the V2 default path
-    val byJson = PgLiteStore.rows("patient")
-    val dropId = byJson.collectFirst { case (id, j) if j.contains(""""id":"r3"""") => id }.get
-    val staleId = byJson.collectFirst { case (id, j) if j.contains(""""id":"r5"""") => id }.get
-    PgLiteStore.delete("patient", dropId)
-    PgLiteStore.replace("patient", staleId,
-      """{"id":"r5","meta":{"versionId":"999"},"resourceType":"Patient"}""")
-    PgLiteStore.put("patient",
-      """{"id":"zzz","meta":{"versionId":"1"},"resourceType":"Patient"}""")
-    val heal = syncLegacy()
-    val patient = heal.find(_.resourceType == "Patient").get
-    assert(patient.inserts === 1 && patient.updates === 1 && patient.deletes === 1,
-      s"one legacy healing run must fix all three corruptions: $patient")
-    assert(patient.reconciled)
+      // an update and a tombstone; the update rewrites a's row in place
+      val changes = Seq(("a", 2L, doc("a", 2)), ("b", 2L, null.asInstanceOf[String]))
+      input.addData(changes: _*)
+      q.processAllAvailable()
+      val changed = PgLiteStore.rows("patient")
+      val pkOf = inserted.map { case (pk, j) => j -> pk }
+      assert(changed === Map(pkOf(doc("a", 1)) -> doc("a", 2),
+        pkOf(doc("c", 1)) -> doc("c", 1)), changed)
+
+      // the same batch replayed: the update is current, the tombstone's
+      // target is gone — nothing to write
+      input.addData(changes: _*)
+      q.processAllAvailable()
+      assert(PgLiteStore.rows("patient") === changed)
+    } finally q.stop()
   }
 
   test("a mid-partition failure commits nothing; the retry writes exactly once") {
     PgLiteStore.clear()
     val spark2 = spark
     import spark2.implicits._
-    val rows = (0 until 8).map(i => s"""{"id":"x$i","meta":{"versionId":"1"}}""")
-      .toDF("resource").coalesce(1)
-    // batchSize 2 → four INSERT statements in the one partition; the
+    val rows = (0 until 8).map(i => ("insert", Option.empty[Int],
+        s"""{"id":"x$i","meta":{"versionId":"1"}}"""))
+      .toDF("action", "pk_id", "resource").coalesce(1)
+    // batchsize 2 → four INSERT statements in the one partition; the
     // connection dies on the third, AFTER two statements already executed
-    val failing = () => {
-      val (exec, close) = PgLiteStore.connect()
-      var stmts = 0
-      ((s: String) => {
-        if (s != "BEGIN" && s != "COMMIT") {
-          stmts += 1
-          if (stmts == 3) throw new RuntimeException("connection lost mid-partition")
-        }
-        exec(s)
-      }, close)
-    }
-    val e = intercept[Exception] {
-      graft.sink.JdbcUpsert.insertPartitions(rows, "patient", failing, batchSize = 2)
-    }
+    def write(connector: String) = graft.sink.v2.JdbcUpsertProvider.write(rows,
+      "patient", Map("connector" -> connector, "batchsize" -> "2"))
+    val e = intercept[Exception](write(classOf[FailingPgLiteConnector].getName))
     assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
-      .exists(_.getMessage.contains("connection lost")), e)
+      .exists(t => t.getMessage != null && t.getMessage.contains("connection lost")), e)
     assert(PgLiteStore.count("patient") === 0L,
       "the already-executed batches must roll back with the failed attempt")
     // the "retry" (here: a fresh run, as Spark's task retry would issue)
-    graft.sink.JdbcUpsert.insertPartitions(rows, "patient",
-      () => PgLiteStore.connect(), batchSize = 2)
+    write(classOf[PgLiteConnector].getName)
     assert(PgLiteStore.count("patient") === 8L, "exactly one copy after retry")
   }
 }

@@ -92,7 +92,6 @@ class IncrementalSyncSpec extends AnyFunSuite {
     val spark2 = spark
     import spark2.implicits._
     graft.runtime.StmtCollector.clear()
-    val connect = () => ((s: String) => graft.runtime.StmtCollector.add(s), () => ())
     val snapshot = Seq((7, "upd", 1L), (8, "del", 1L))
       .toDF("pk_id", "resource_id", "version_id")
     val batch = Seq(
@@ -100,7 +99,8 @@ class IncrementalSyncSpec extends AnyFunSuite {
       ("upd", 2L, "payload-upd"),
       ("del", 2L, null.asInstanceOf[String]))
       .toDF("resource_id", "version_id", "resource")
-    IncrementalSync.applyJdbc("patient", connect)(
+    IncrementalSync.applyJdbc("patient",
+      Map("connector" -> classOf[graft.runtime.StmtCollectorConnector].getName))(
       IncrementalSync.classifyCdc(batch, snapshot))
     val stmts = graft.runtime.StmtCollector.snapshot()
     assert(stmts.exists(s => s.startsWith("INSERT INTO patient") &&
@@ -109,8 +109,8 @@ class IncrementalSyncSpec extends AnyFunSuite {
       s.contains("payload-upd") && s.contains("(7,")), stmts.mkString("\n"))
     assert(stmts.exists(s => s.startsWith("DELETE FROM patient") &&
       s.contains("8")), stmts.mkString("\n"))
-    // each non-empty partition wraps its batches in BEGIN…COMMIT (the
-    // sink's task-retry atomicity); the data statements stay 1:1 per action
+    // each writing task wraps its batches in BEGIN…COMMIT (the sink's
+    // task-retry atomicity); the data statements stay 1:1 per action
     val data = stmts.filterNot(s => s == "BEGIN" || s == "COMMIT")
     assert(data.size === 3, s"exactly one data statement per action: $stmts")
     assert(stmts.count(_ == "BEGIN") === stmts.count(_ == "COMMIT"),
